@@ -8,12 +8,11 @@ import org.apache.spark.sql.SparkSession
   * alternates the two variants run-by-run (A B A B ...) so both see
   * the same drift, and reports per-variant medians.
   *
-  * The variant switch is a JVM system property read at PLAN
-  * CONSTRUCTION time by the code under test (e.g.
-  * `graft.lsh.prefilter` in [[graft.pipeline.NearDup.lshPairs]]) —
-  * or, when the key starts with `spark.`, a session conf set via
+  * The variant switch is a Spark session conf set via
   * `spark.conf.set` (e.g. A/B-ing
-  * `spark.sql.optimizer.windowGroupLimitThreshold`).
+  * `spark.sql.optimizer.windowGroupLimitThreshold`); any other key is
+  * rejected. The engine has one implementation per operator, so an
+  * A/B of two code paths pairs two builds (perfbench/), not a switch.
   *
   * Usage: runMain graft.AbProfile <sfDir> <query> <reps-per-variant>
   *   <propKey> <valueA> <valueB>
@@ -26,6 +25,9 @@ object AbProfile {
     val propKey = args(3)
     val va = args(4)
     val vb = args(5)
+    require(propKey.startsWith("spark."),
+      s"AbProfile varies a Spark session conf; '$propKey' is not a " +
+        "spark.* key")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -37,9 +39,7 @@ object AbProfile {
         "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    def setVariant(v: String): Unit =
-      if (propKey.startsWith("spark.")) spark.conf.set(propKey, v)
-      else sys.props(propKey) = v
+    def setVariant(v: String): Unit = spark.conf.set(propKey, v)
     try SparkEntry.queries("q01_pricing_summary")(spark, sfDir).count()
     catch { case _: Throwable => () }
     // untimed warmup of the query itself under each variant: plan

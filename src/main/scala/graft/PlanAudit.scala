@@ -25,15 +25,11 @@ object PlanAudit {
       .flatMap(_.split(";")).map(_.trim).filter(_.nonEmpty)
       .foreach { kv =>
         kv.split("=", 2) match {
-          case Array(k, v) =>
-            // non-spark keys are the library's own plan-shape knobs
-            // (e.g. graft.cleanup.fusedKept), read from sys.props at
-            // plan construction time — same convention as AbProfile
-            if (k.startsWith("spark.")) spark.conf.set(k, v)
-            else sys.props(k) = v
+          case Array(k, v) if k.startsWith("spark.") =>
+            spark.conf.set(k, v)
             println(s"[planaudit] conf override: $k=$v")
           case _ => sys.error(
-            s"SPARK_GRAFT_CONF entry '$kv' is not key=value")
+            s"SPARK_GRAFT_CONF entry '$kv' is not spark.*=value")
         }
       }
     names.foreach { n =>

@@ -32,14 +32,16 @@ import org.apache.spark.sql.functions._
   * Measurements printed per phase (and summarized in DESIGN.md):
   *  - band-bucket histogram: max / p50 / p99 bucket size, buckets
   *    over cap, share of band rows lost to capped buckets;
-  *  - per-CC-round wall time (GRAFT_CC_DEBUG=1 prints rounds) and
-  *    per-job shuffle read/write bytes+records from a listener, so
-  *    round-over-round growth is visible directly;
+  *  - the connected-components breakdown (`Clusters.lastStats`:
+  *    pairs, loop partitions, per-phase and per-round wall time)
+  *    after each query that runs the CC loop, and per-job shuffle
+  *    read/write bytes+records from a listener, so round-over-round
+  *    growth is visible directly;
   *  - end-to-end times for p02/p16/p33/p47/p67 pointed at the
   *    fixture dir through the very SparkEntry registry the driver
   *    runs.
   *
-  * Usage: GRAFT_CC_DEBUG=1 runMain graft.Soak [sfDir] [copies]
+  * Usage: runMain graft.Soak [sfDir] [copies]
   */
 object Soak {
 
@@ -219,6 +221,15 @@ object Soak {
       f"buckets holding $capped rows (${100.0 * capped / rows}%.2f%% of band rows dropped by the guard)")
   }
 
+  /** Runs `body`, then prints the CC breakdown if it ran the loop. */
+  private def withCcStats[T](label: String)(body: => T): T = {
+    graft.pipeline.Clusters.lastStats = None
+    val r = body
+    graft.pipeline.Clusters.lastStats.foreach(js =>
+      println(s"[soak] $label cc: $js"))
+    r
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val copies = if (args.length > 1) args(1).toInt else 10
@@ -250,8 +261,12 @@ object Soak {
       "p43_incremental_dedup", "p52_simhash_neardup").foreach { q =>
       listener.reset()
       val t = System.nanoTime()
-      val df = SparkEntry.queries(q)(spark, fixDir)
-      val rows = df.count()
+      // CC runs while the query builds its plan, so both the build
+      // and the action sit inside the stats window
+      val (df, rows) = withCcStats(q) {
+        val df = SparkEntry.queries(q)(spark, fixDir)
+        (df, df.count())
+      }
       val secs = (System.nanoTime() - t) / 1e9
       println(f"[soak] $q: $secs%.1f s ($rows rows)")
       if (q == "p16_dup_clusters") listener.dump(q)
@@ -286,7 +301,8 @@ object Soak {
       "p79_decontamination_matrix", "p30_span_dedup").foreach { q =>
       listener.reset()
       val t = System.nanoTime()
-      val rows = SparkEntry.queries(q)(spark, deconDir).count()
+      val rows = withCcStats(q)(
+        SparkEntry.queries(q)(spark, deconDir).count())
       val secs = (System.nanoTime() - t) / 1e9
       println(f"[soak] $q: $secs%.1f s ($rows rows)")
       listener.dump(q)
@@ -313,9 +329,10 @@ object Soak {
         col("doc_id_b").as("b"))
       Seq(3, 6, 25).foreach { mi =>
         val t = System.nanoTime()
-        val lab = graft.pipeline.Clusters.connectedComponents(
-          nodes, edges, maxIter = mi, trustedEndpoints = true,
-          strict = false)
+        val lab = withCcStats(s"maxIter=$mi")(
+          graft.pipeline.Clusters.connectedComponents(
+            nodes, edges, maxIter = mi, trustedEndpoints = true,
+            strict = false))
         val comp = lab.groupBy("label")
           .agg(count(lit(1)).as("sz")).filter(col("sz") >= 2)
         val prof = comp.agg(count(lit(1)).as("n"),

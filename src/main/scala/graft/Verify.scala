@@ -29,7 +29,7 @@ object Verify {
       // same AQE cached-plan coalescing as Bench: correctness results
       // must come from the same planning mode the bench measures
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_CACHE", "true"))
+        "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** G5/§1.5: xarray-style cube assembly — pivot the record catalog into
@@ -32,29 +31,20 @@ object Cubes {
       df.withColumn("rid", struct(col("path"), col("key")))
     }
 
-  /** r14 optimization (guide §2.3 "aggregate before you shuffle"):
-    * the representative-record pick used to be a row_number window —
-    * which shuffles EVERY payload-bearing row to its group partition
-    * and SORTS it there — when all that is needed is the min-rid
-    * row's `d` per group. A grouped min_by runs partial (map-side)
-    * aggregation, so each map task ships at most one candidate row
-    * per group and the per-partition sort disappears; rid is unique
-    * (record id / (path,key)), so min_by picks exactly the row the
-    * window's rank-1 filter picked, and both order rid structs
-    * lexicographically. `graft.cubes.minByPick=off` restores the
-    * window pick for paired A/B.
+  /** The min-rid row's `d` per group, as a grouped `min_by` rather
+    * than a row_number window: partial (map-side) aggregation ships
+    * at most one candidate row per group from each map task and
+    * needs no per-partition sort (guide §2.3 "aggregate before you
+    * shuffle"; paired A/B in OPTIMIZATION_r14.md section 6). rid is
+    * unique (record id / (path,key)). The ordering key is wrapped in
+    * a struct because `min_by` skips null keys: the struct itself is
+    * never null and its field sorts nulls first, so a null rid wins
+    * the pick, as it would rank first in an ascending window.
     */
   private def pickMinRid(data: DataFrame, keys: Seq[String])
-      : DataFrame = {
-    if (!sys.props.get("graft.cubes.minByPick").contains("off"))
-      data.groupBy(keys.map(col): _*)
-        .agg(min_by(col("d"), col("rid")).as("d"))
-    else {
-      val w = Window.partitionBy(keys.map(col): _*).orderBy("rid")
-      data.withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-    }
-  }
+      : DataFrame =
+    data.groupBy(keys.map(col): _*)
+      .agg(min_by(col("d"), struct(col("rid"))).as("d"))
 
   def toCube(df0: DataFrame): DataFrame = {
     val df = withRid(df0)

@@ -76,8 +76,9 @@ object Select {
     val cols = g.columns
     val noMeta = antiMeta(g).filter(dataPredicate)
     // The meta side is tiny by construction (coordinate/descriptor
-    // records only) but feeds five kept-set branches — cache it so the
-    // catalog is not re-scanned per branch.
+    // records only) but feeds two kept-set branches (deformation and
+    // P0/PT/HY/!!) — cache it so the catalog is not re-scanned per
+    // branch.
     val metaDf = selectMeta(g)
       .transform(graft.core.CacheRegistry.persist(_))
 
@@ -162,78 +163,40 @@ object Select {
     // HY's keep rule is grid-less: hybrid levels anywhere (1 row)
     val hybridAny = summary.agg(max("s_hybrid").as("any_hybrid"))
 
-    // r14 optimization (guide §2.4, r13 verdict #2): the P0 / PT /
-    // HY / !! kept sets used to be four separate branches, each a
-    // broadcast join plus its own dropDuplicates(MetaSubset)
-    // exchange over the SAME persisted meta cache. The four rules
-    // are disjoint by nomvar and MetaSubset contains nomvar, so one
-    // filtered pass with a per-nomvar predicate and a SINGLE
-    // MetaSubset dedup keeps exactly the same rows: per key the
-    // dedup candidates are identical (no cross-nomvar collapse is
-    // possible), and the left join + null-propagating predicates
-    // reproduce the inner-join semantics (a null has_* flag fails
-    // every conjunct that needs it). `graft.cleanup.fusedKept=off`
-    // restores the four-branch shape for paired A/B.
-    val fusedKept =
-      !sys.props.get("graft.cleanup.fusedKept").contains("off")
+    // The P0 / PT / HY / !! kept sets are disjoint by nomvar and
+    // MetaSubset contains nomvar, so one filtered pass with a
+    // per-nomvar predicate and a SINGLE MetaSubset dedup keeps the
+    // same rows as four separate broadcast-join + dedup branches
+    // would (no cross-nomvar collapse is possible), and the left
+    // join + null-propagating predicates reproduce inner-join
+    // semantics (a null has_* flag fails every conjunct that needs
+    // it). Paired A/B against the four-branch shape:
+    // OPTIMIZATION_r14.md section 4.
     val hv = graft.meta.Lookups.HybridVcodes
     val sv = graft.meta.Lookups.SigmaVcodes
     val pv = graft.meta.Lookups.PressureVcodes
-    val keptBranches: Seq[DataFrame] = if (fusedKept) {
-      val dimsOk =
-        col("ni") === col("gni") && col("nj") === col("gnj")
-      val kept4 = metaDf
-        .filter(col("nomvar").isin("P0", "PT", "HY", "!!"))
-        .join(broadcast(perGrid
-          .withColumnRenamed("grid", "kgrid")),
-          col("grid") === col("kgrid"), "left")
-        .crossJoin(broadcast(hybridAny))
-        .filter(
-          (col("nomvar") === "P0" &&
-            (col("has_sigma") || col("has_hybrid")) && dimsOk) ||
-          (col("nomvar") === "PT" && col("has_sigma") && dimsOk) ||
-          (col("nomvar") === "HY" && col("any_hybrid")) ||
-          (col("nomvar") === "!!" && (
-            (col("has_hybrid") && col("ig1").isin(hv: _*)) ||
-            (col("has_sigma") && col("ig1").isin(sv: _*)) ||
-            (col("has_pressure") && col("ig1").isin(pv: _*)))))
-        .select(cols.map(col): _*)
-        .dropDuplicates(MetaSubset)
-      Seq(deform, kept4)
-    } else {
-      // J6: P0/PT records matching grid and dims of model-level grids
-      def surfaceFields(nomvar: String, flag: Column): DataFrame =
-        metaDf.filter(col("nomvar") === nomvar)
-          .join(broadcast(perGrid.filter(flag)
-            .select(col("grid").as("sgrid"), col("gni"), col("gnj"))),
-            col("grid") === col("sgrid") && col("ni") === col("gni")
-              && col("nj") === col("gnj"))
-          .select(cols.map(col): _*)
-          .dropDuplicates(MetaSubset)
-      val p0 =
-        surfaceFields("P0", col("has_sigma") || col("has_hybrid"))
-      val pt = surfaceFields("PT", col("has_sigma"))
-      // HY kept iff hybrid levels exist anywhere (HY is grid-less)
-      val hy = metaDf.filter(col("nomvar") === "HY")
-        .crossJoin(broadcast(hybridAny))
-        .filter(col("any_hybrid"))
-        .select(cols.map(col): _*)
-        .dropDuplicates(MetaSubset)
-      // !! filtered per vcode family of the grid's level kinds
-      val toctoc = metaDf.filter(col("nomvar") === "!!")
-        .join(broadcast(perGrid.select(
-          "grid", "has_sigma", "has_hybrid", "has_pressure")),
-          Seq("grid"))
-        .filter(
+    val dimsOk = col("ni") === col("gni") && col("nj") === col("gnj")
+    val kept = metaDf
+      .filter(col("nomvar").isin("P0", "PT", "HY", "!!"))
+      .join(broadcast(perGrid.withColumnRenamed("grid", "kgrid")),
+        col("grid") === col("kgrid"), "left")
+      .crossJoin(broadcast(hybridAny))
+      .filter(
+        // P0/PT: surface fields matching grid and dims of model-level
+        // grids; HY: hybrid levels anywhere (HY is grid-less); !!:
+        // per vcode family of the grid's level kinds
+        (col("nomvar") === "P0" &&
+          (col("has_sigma") || col("has_hybrid")) && dimsOk) ||
+        (col("nomvar") === "PT" && col("has_sigma") && dimsOk) ||
+        (col("nomvar") === "HY" && col("any_hybrid")) ||
+        (col("nomvar") === "!!" && (
           (col("has_hybrid") && col("ig1").isin(hv: _*)) ||
           (col("has_sigma") && col("ig1").isin(sv: _*)) ||
-          (col("has_pressure") && col("ig1").isin(pv: _*)))
-        .select(cols.map(col): _*)
-        .dropDuplicates(MetaSubset)
-      Seq(deform, p0, pt, hy, toctoc)
-    }
+          (col("has_pressure") && col("ig1").isin(pv: _*)))))
+      .select(cols.map(col): _*)
+      .dropDuplicates(MetaSubset)
 
-    keptBranches.foldLeft(noMeta)((acc, d) => acc.unionByName(d))
+    noMeta.unionByName(deform).unionByName(kept)
   }
 
   // ---------- DuckDB twin ----------

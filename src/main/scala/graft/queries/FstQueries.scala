@@ -579,12 +579,11 @@ object FstQueries {
         .withColumn("ay", lit(null).cast("array<float>"))
       val recs = graft.ops.Grids.dfFromGrid(params)
         .withColumn("grid", lit("u1"))
-      // NO cacheCoords: the input is a one-row local frame; r13's
-      // unconditional persist+count inside latLon2d cost f57 a fixed
-      // materialization action it cannot amortize (~1.5x the query,
-      // r13 verdict #3). The sys-prop exists only for paired A/B.
-      graft.ops.Grids.latLon2d(recs, cacheCoords =
-        sys.props.get("graft.f57.cacheCoords").contains("on"))
+      // NO cacheCoords: the input is a one-row local frame, and a
+      // persist+count would cost f57 a fixed materialization action it
+      // cannot amortize (~1.5x the query; OPTIMIZATION_r14.md
+      // section 3)
+      graft.ops.Grids.latLon2d(recs)
         .select(col("grid"), col("nomvar"), col("ni"), col("nj"),
           posexplode(col("d")))
         .select(col("grid"), col("nomvar"), col("ni"), col("nj"),

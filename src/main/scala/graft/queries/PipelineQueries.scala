@@ -802,31 +802,27 @@ object PipelineQueries {
     // global sort of the scored corpus.
     "p49_dsir_resample" -> ((s, dir) => {
       val b = 256
-      // r13 optimization (guide §2.4): the bucket census and the
-      // per-doc scoring join both consume the hashed-token table —
-      // unpersisted, the explode + per-word md5 (the dominant
-      // per-row cost) ran twice per action.
-      // r14 hardening (r13 verdict #5/what's-wrong): the r13 persist
-      // was one row PER TOKEN INSTANCE — narrow, but corpus-token-
-      // scale (~24 B x tokens pinned through the action at 100 TB).
-      // Roll up to (doc_id, source, bucket, n) BEFORE the persist:
-      // the cache is now bounded by |docs| x 256 rows regardless of
-      // document length, and both consumers survive the rollup
-      // exactly — the census sums n instead of counting rows, and
-      // the per-doc weight Σ lr becomes Σ lr·n, exact in DECIMAL
-      // (lr(28,9) x n(9,0) -> (38,9), no precision loss) so the
-      // rounded double is bit-identical. `graft.p49.rollup=off`
-      // restores the per-instance cache for paired A/B.
-      val rollup = !sys.props.get("graft.p49.rollup").contains("off")
-      val inst = docs(s, dir).select(col("doc_id"), col("source"),
+      // The bucket census and the per-doc scoring join both consume
+      // the hashed-token table, so it is persisted: unpersisted, the
+      // explode + per-word md5 (the dominant per-row cost) ran twice
+      // per action. It is rolled up to (doc_id, source, bucket, n)
+      // BEFORE the persist, so the cache is bounded by |docs| x 256
+      // rows regardless of document length (a per-token-instance
+      // cache pins ~24 B x tokens; A/B in OPTIMIZATION_r14.md
+      // section 7). Both consumers survive the rollup exactly: the
+      // census sums n instead of counting rows, and the per-doc
+      // weight Σ lr becomes Σ lr·n, exact in DECIMAL so the rounded
+      // double is bit-identical. Up to 1e18 tokens each log term lies
+      // in (-42, 0], so |lr| < 42 fits decimal(18,9); n is cast to
+      // decimal(18,0), and the product is decimal(37,9): scale 9 kept,
+      // counts up to 1e18 fit.
+      val toks = docs(s, dir).select(col("doc_id"), col("source"),
           explode(transform(words(col("text")), w => lower(w)))
             .as("w"))
         .select(col("doc_id"), col("source"),
           pmod(h64(col("w"), 7), lit(b.toLong)).as("b"))
-      val toks = (if (rollup)
-          inst.groupBy("doc_id", "source", "b")
-            .agg(count(lit(1)).as("n"))
-        else inst.withColumn("n", lit(1L)))
+        .groupBy("doc_id", "source", "b")
+        .agg(count(lit(1)).as("n"))
         .transform(graft.core.CacheRegistry.persist(_))
       toks.count() // materialize before the two-branch fan-out
       val buckets = toks.groupBy("b").agg(
@@ -842,11 +838,11 @@ object PipelineQueries {
               (col("tgt_n") + b)) -
             log((col("raw_cnt").cast("double") + 1.0) /
               (col("raw_n") + b)), 9)
-            .cast("decimal(28,9)").as("lr"))
+            .cast("decimal(18,9)").as("lr"))
       val scored = toks.join(broadcast(lr), Seq("b"))
         .groupBy("doc_id")
         .agg(sum(col("n")).as("n_tok"),
-          round(sum(col("lr") * col("n").cast("decimal(9,0)"))
+          round(sum(col("lr") * col("n").cast("decimal(18,0)"))
             .cast("double"), 6).as("weight"))
         .transform(graft.core.CacheRegistry.persist(_))
       scored.count() // materialize before the threshold + flag branches
@@ -1817,14 +1813,6 @@ object PipelineQueries {
       // lambdas never codegen), which measured ~5x slower than this
       // shape; post-combine the exchange carries <= 9 rows per doc,
       // so it stays O(docs), not O(tokens), at any corpus size.
-      val dbg77 = sys.env.contains("GRAFT_P77_DEBUG")
-      def t77[T](msg: String)(body: => T): T = {
-        val t0 = System.nanoTime()
-        val r = body
-        if (dbg77) println(
-          f"[p77] $msg: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        r
-      }
       val f = docs(s, dir)
         // the fixture table is one (unsplittable) parquet row group:
         // widen BEFORE the explode fans out to token rows, or the
@@ -1852,7 +1840,6 @@ object PipelineQueries {
       // sequentially — acc needs broadcast(w2) needs broadcast(w1)
       // — so the cache fills exactly once during w1's stage and
       // every later scan hits it; the whole query is ONE action.
-      if (dbg77) t77("features")(f.count())
       def zOf(wv: Column): Column = aggregate(
         zip_with(col("x"), wv, (a, b) => a.cast("double") * b),
         lit(0.0), (a, t) => a + t)

@@ -116,7 +116,7 @@ object CsvRecords {
     * codegen subexpression sharing). Binding makes each evaluation
     * of any derived expression split the payload string exactly
     * once: the explode stage 4.2 s -> 0.7 s, f21 end-to-end warm
-    * ~4.8 s -> ~1.3 s (F21Rca / Profile, DESIGN.md round 10).
+    * ~4.8 s -> ~1.3 s (Profile, DESIGN.md round 10).
     */
   def parsePayload(df: DataFrame): DataFrame = {
     def bound[A](f: Column => Column): Column =

@@ -90,6 +90,50 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(names.contains("P0")) // sigma levels justify P0
   }
 
+  test("metadataCleanup kept-set rules: P0, PT, HY and !! per grid") {
+    import spark.implicits._
+    val sg = IpCodec.encode(0.5f, 1)
+    val hy = IpCodec.encode(0.5f, 5)
+    val pr = IpCodec.encode(500f, 2)
+    // data grids are ig1||ig2: "11" sigma, "22" hybrid, "33"
+    // pressure-only; !! records name their grid by ip1||ip2 and
+    // carry the vcode in ig1; HY is grid-less
+    val cat = Seq(
+      // rid, nomvar, ni, nj, ip1, ip2, ig1, ig2
+      (1L, "TT", 2, 2, sg, 0, 1, 1),
+      (2L, "TT", 2, 2, hy, 0, 2, 2),
+      (3L, "TT", 2, 2, pr, 0, 3, 3),
+      (10L, "P0", 2, 2, 0, 0, 1, 1),   // sigma grid, dims match
+      (11L, "P0", 3, 3, 0, 0, 1, 1),   // sigma grid, dims differ
+      (12L, "P0", 2, 2, 0, 0, 2, 2),   // hybrid grid
+      (13L, "P0", 2, 2, 0, 0, 3, 3),   // pressure-only grid
+      (20L, "PT", 2, 2, 0, 0, 1, 1),   // sigma grid
+      (21L, "PT", 2, 2, 0, 0, 2, 2),   // hybrid grid: not kept
+      (30L, "HY", 1, 1, hy, 0, 0, 0),
+      (40L, "!!", 5, 1, 1, 1, 1001, 0), // sigma vcode on sigma grid
+      (41L, "!!", 5, 1, 1, 1, 5002, 0), // hybrid vcode on sigma grid
+      (42L, "!!", 5, 1, 2, 2, 5002, 0), // hybrid vcode on hybrid grid
+      (43L, "!!", 5, 1, 3, 3, 2001, 0), // pressure vcode, pressure grid
+      (44L, "!!", 5, 1, 3, 3, 1001, 0)) // sigma vcode on pressure grid
+      .toDF("rid", "nomvar", "ni", "nj", "ip1", "ip2", "ig1", "ig2")
+      .withColumn("typvar", lit("P")).withColumn("etiket", lit("E"))
+      .withColumn("nk", lit(1)).withColumn("ip3", lit(0))
+      .withColumn("dateo", lit(442998800L))
+      .withColumn("datev", lit(442998800L))
+      .withColumn("deet", lit(0)).withColumn("npas", lit(0))
+      .withColumn("datyp", lit(5)).withColumn("nbits", lit(32))
+      .withColumn("grtyp", lit("Z"))
+      .withColumn("ig3", lit(0)).withColumn("ig4", lit(0))
+    def kept(pred: org.apache.spark.sql.Column): Set[Long] =
+      Select.metadataCleanup(cat, pred).select("rid").collect()
+        .map(_.getLong(0)).toSet
+    assert(kept(lit(true)) ==
+      Set(1L, 2L, 3L, 10L, 12L, 20L, 30L, 40L, 42L, 43L))
+    // without the hybrid data record no hybrid level exists anywhere:
+    // HY goes, and so do the hybrid grid's P0 and !!
+    assert(kept(col("ig1") =!= 2) == Set(1L, 3L, 10L, 20L, 40L, 43L))
+  }
+
   test("vctype classification: sigma grid with P0 -> SIGMA_1001") {
     val vc = VCoord.setVerticalCoordinateType(mkCatalog())
     val types = vc.filter(col("nomvar") === "TT")
@@ -298,6 +342,25 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(cube.getSeq[Float](cube.fieldIndex("levels")) == Seq(1.0f, 0.5f))
     assert(cube.getSeq[Float](cube.fieldIndex("cube")) ==
       Seq(5f, 6f, 7f, 8f, 1f, 2f, 3f, 4f))
+  }
+
+  test("cube pick takes the minimum rid; a null rid sorts first") {
+    import spark.implicits._
+    def cubeOf(rids: Seq[Option[Long]]): Seq[Float] = {
+      // two records share (grid, nomvar, ip1_kind, level)
+      val df = rids.zipWithIndex.map { case (r, i) =>
+        (r, "g", "TT", 1, 0.5f, Seq(i.toFloat, i.toFloat))
+      }.toDF("rid", "grid", "nomvar", "ip1_kind", "level", "d")
+      val row = Cubes.toCube(df).head()
+      assert(row.getAs[Int]("n_levels") == 1)
+      row.getSeq[Float](row.fieldIndex("cube"))
+    }
+    assert(cubeOf(Seq(Some(7L), Some(3L))) == Seq(1f, 1f))
+    assert(cubeOf(Seq(Some(3L), Some(7L))) == Seq(0f, 0f))
+    // min_by alone skips null keys; the pick matches an ascending
+    // rid window's rank-1 row, where nulls come first
+    assert(cubeOf(Seq(Some(7L), None)) == Seq(1f, 1f))
+    assert(cubeOf(Seq(None, Some(7L))) == Seq(0f, 0f))
   }
 
   test("asof join matches same-instant rows and nulls with no prior") {
